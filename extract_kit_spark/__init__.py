@@ -17,6 +17,7 @@ pipeline.py  the Spark job: read → gate → repartition → mapInPandas → wr
 manifest.py  checkpoint/lineage manifests for exact resume
 fixtures.py  deterministic synthetic `pages` table generator (seed=42)
 session.py   SparkSession helper tuned for the extraction workload
+daemon.py    Python worker daemon that session.py starts workers from
 """
 
 __version__ = "0.1.0"

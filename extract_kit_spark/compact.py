@@ -34,6 +34,7 @@ import json
 import os
 import tempfile
 import time
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -111,14 +112,18 @@ def compact_output(spark: SparkSession, output_dir: str,
     sel = table.where(pstr.isin(*plan))
     before = _row_checksum(sel)
 
-    # per-partition salt in [0, k_p): k_p files per partition after the
-    # (pcol, salt) hash repartition; sortWithinPartitions keeps the
-    # files byte-comparable across reruns (pipeline invariant P6)
-    kmap = F.create_map(*[F.lit(x) for kv in plan.items() for x in kv])
-    salt = F.pmod(F.xxhash64("url"), kmap[pstr]).alias("__salt")
-    (sel.withColumn("__salt", salt)
-        .repartition(max(sum(plan.values()), 1), pcol, "__salt")
-        .drop("__salt")
+    # per-partition salt in [0, k_p); each (partition, salt) pair gets
+    # its own task, numbered densely (partition's offset + salt), so a
+    # partition gets k_p files, which a hash of (pcol, salt) would not
+    # ensure; sortWithinPartitions keeps the files byte-comparable
+    # across reruns (pipeline invariant P6)
+    def lit_map(m: dict):
+        return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+
+    offsets = dict(zip(plan, accumulate(plan.values(), initial=0)))
+    task = (lit_map(offsets)[pstr]
+            + F.pmod(F.xxhash64("url"), lit_map(plan)[pstr])).cast("int")
+    (sel.repartitionById(sum(plan.values()), task)
         .sortWithinPartitions("url")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

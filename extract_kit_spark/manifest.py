@@ -8,9 +8,12 @@ temp-file-then-rename (atomic on POSIX). The API is narrow enough that a
 real Iceberg catalog can be dropped in behind it unchanged.
 
 Layout under <output_dir>/:
-    data/bucket=<b>/part-*.parquet     extraction results
-    lineage/group-<g>.parquet          one row per committed bucket
-    _manifest.json                     commit log: job_id, committed buckets
+    data/p_bucket=<b>/part-*.parquet   extraction results, bucketed layout
+    data/group=<g>/part-*.parquet      extraction results, scan layout
+    lineage/group-<g>/part-*.parquet   per group: one row per bucket that
+                                       holds rows, or per input file
+    _manifest.json                     commit log: job_id, committed
+                                       buckets (bucketed) or groups (scan)
 """
 
 from __future__ import annotations

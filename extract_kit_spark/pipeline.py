@@ -15,10 +15,13 @@ time at local[32]; at 100 TB a payload shuffle would be the single
 dominant cost of the job. Skew from giant documents is bounded by the
 per-doc byte cap, not by repartitioning.
 
-``run_extraction_bucketed``: adds a repartition on xxhash64(url) so the
-OUTPUT is bucketed by url hash (one bucket per task, sorted within) —
-pay the shuffle only when downstream consumers need url-co-located /
-bucket-joinable output. Resume granularity is bucket groups.
+``run_extraction_bucketed``: buckets rows by xxhash64(url) and shuffles
+each row to the task numbered by its bucket's index in the commit group
+(``repartitionById``), so each bucket has one task to itself and the
+OUTPUT is bucketed by url hash, sorted within — pay the shuffle only
+when downstream consumers need url-co-located / bucket-joinable output.
+Resume granularity is bucket groups; a bucket no url hashes to is
+committed empty.
 
 Shared scale design
 -------------------
@@ -205,12 +208,17 @@ def run_extraction_bucketed(spark: SparkSession,
     n_done_groups = 0
 
     for gi, group in enumerate(groups):
+        ids = [int(b) for b in group]
         # bucket predicate prunes the shuffle input; on a bucket-
         # partitioned Iceberg table this becomes partition pruning
-        part = bucketed.where(F.col("p_bucket").isin([int(b)
-                                                      for b in group]))
-        # one task per bucket in the group: repartition on the bucket id
-        shuffled = part.repartition(len(group), "p_bucket")
+        part = bucketed.where(F.col("p_bucket").isin(ids))
+        # one task per bucket in the group: each row goes to the task
+        # numbered by its bucket's index in the group. A hash of the
+        # bucket id would put several buckets on one task and leave
+        # others empty.
+        slot = F.array_position(F.array(*map(F.lit, ids)),
+                                F.col("p_bucket")) - 1
+        shuffled = part.repartitionById(len(group), slot.cast("int"))
         extracted = shuffled.mapInPandas(extract_batch,
                                          schema=STAGE_SCHEMA)
         # deterministic output file contents: sort within partition.
@@ -227,10 +235,11 @@ def run_extraction_bucketed(spark: SparkSession,
                 f"test hook: killed before commit of group {gi}")
 
         # lineage from the written columns (cheap column-pruned re-scan,
-        # avoids caching MB-size text)
+        # avoids caching MB-size text); the schema is given because a
+        # group of empty buckets may leave no file to infer it from
         lineage = (
-            spark.read.parquet(data_dir)
-            .where(F.col("p_bucket").isin([int(b) for b in group]))
+            spark.read.schema(STAGE_SCHEMA).parquet(data_dir)
+            .where(F.col("p_bucket").isin(ids))
             .groupBy("p_bucket")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum(F.when(F.col("status") == "ok", 1)
@@ -244,14 +253,17 @@ def run_extraction_bucketed(spark: SparkSession,
         (lineage.write.mode("append")
          .parquet(os.path.join(lineage_dir, f"group-{gi}")))
 
-        manifest.commit(
-            {int(r["p_bucket"]): {
+        # a bucket no document hashed to has no lineage row; it is
+        # committed empty, or the job would never complete
+        entries = {b: {"n_rows": 0, "n_ok": 0, "n_failed": 0,
+                       "bytes_in": 0, "checksum": None} for b in ids}
+        for r in lineage_rows:
+            entries[int(r["p_bucket"])] = {
                 "n_rows": int(r["n_rows"]), "n_ok": int(r["n_ok"]),
                 "n_failed": int(r["n_failed"]),
                 "bytes_in": int(r["bytes_in"]),
                 "checksum": r["checksum"]}
-             for r in lineage_rows},
-            n_buckets)
+        manifest.commit(entries, n_buckets)
         n_done_groups += 1
         if fail_after_groups is not None \
                 and n_done_groups >= fail_after_groups:

@@ -6,6 +6,7 @@ parallelism-independence of results."""
 import hashlib
 import json
 import os
+import shutil
 
 import pytest
 
@@ -94,6 +95,37 @@ def test_lineage_counts_match(spark, extracted):
     assert agg["ok"] == summary["n_ok"]
     assert lineage.select("p_bucket").distinct().count() == \
         summary["n_buckets"]
+
+
+def test_bucket_placement_is_a_bijection(spark, extracted):
+    """Each bucket is extracted by exactly one task, and the buckets of
+    one commit group (n_buckets=8, commit_group_size=4) by distinct
+    tasks: no task carries two buckets while another idles."""
+    out, _ = extracted
+    ids = {r["p_bucket"]: r["ids"] for r in read_extractions(spark, out)
+           .groupBy("p_bucket")
+           .agg(F.collect_set("partition_id").alias("ids")).collect()}
+    assert sorted(ids) == list(range(8))
+    assert all(len(v) == 1 for v in ids.values())
+    for group in (range(0, 4), range(4, 8)):
+        assert len({ids[b][0] for b in group}) == len(group)
+
+
+def test_empty_buckets_commit_and_complete(spark, tmp_path_factory):
+    """3 docs into 8 buckets leave at least 5 buckets empty; they are
+    committed with zero rows, so the job completes and a rerun has
+    nothing to do. Groups of one bucket include groups with no data."""
+    p = tmp_path_factory.mktemp("few") / "pages.parquet"
+    write_pages_parquet(str(p), 3)
+    for size in (8, 1):
+        out = str(tmp_path_factory.mktemp("fewout") / "x")
+        first = run_extraction(spark, str(p), out, job_id="few",
+                               n_buckets=8, commit_group_size=size)
+        assert first["complete"] and first["n_rows"] == 3
+        again = run_extraction(spark, str(p), out, job_id="few",
+                               n_buckets=8, commit_group_size=size)
+        assert again["complete"] and again["n_groups_run"] == 0
+        assert again["n_rows"] == 3
 
 
 def test_exact_resume_after_kill(spark, pages_path, tmp_path_factory):
@@ -288,6 +320,35 @@ def test_compact_output_merges_small_files_preserving_bytes(
     with open(os.path.join(out, "_compactions.json")) as f:
         log = json.load(f)
     assert len(log) == 1 and log[0]["files_after"] == len(pdirs)
+
+
+def test_compact_output_gives_each_partition_its_file_target(
+        spark, pages_path, tmp_path_factory):
+    """With a target that splits partitions into k_p >= 2 files, every
+    compacted partition ends with exactly k_p = ceil(bytes / target)
+    files: no two (partition, salt) pairs share a task."""
+    import glob
+    from extract_kit_spark.compact import _partition_stats, compact_output
+
+    out = str(tmp_path_factory.mktemp("compactk") / "x")
+    run_extraction(spark, pages_path, out, job_id="cmpk",
+                   n_buckets=2, commit_group_size=2)
+    data = os.path.join(out, "data")
+    for pdir in sorted(glob.glob(os.path.join(data, "*=*"))):
+        frag = spark.read.parquet(pdir).repartition(8)
+        frag.write.mode("overwrite").parquet(pdir + ".tmp")
+        shutil.rmtree(pdir)
+        os.replace(pdir + ".tmp", pdir)
+    _, stats = _partition_stats(data)
+    target = max(b for _, b in stats.values()) // 3 + 1
+    want = {v: -(-b // target) for v, (_, b) in stats.items()}
+    assert all(k >= 2 for k in want.values())
+
+    summary = compact_output(spark, out, target_bytes=target)
+    assert summary["compacted_partitions"] == len(want)
+    _, after = _partition_stats(data)
+    assert {v: n for v, (n, _) in after.items()} == want
+    assert summary["files_after"] == sum(want.values())
 
 
 def test_reprocess_quarantined_replays_only_failures(
